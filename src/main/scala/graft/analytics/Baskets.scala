@@ -22,39 +22,18 @@ object Baskets {
     * (`AI_Cost_Cutting_Market_Analysis/src/tool.py:296-363`): positive ⟕
     * negative exposure counts per company, sector info attached from the
     * unioned frames, exemplar headline, percentage shares, net exposure,
-    * top-10 by total. */
-  /** The basket's per-entity aggregate in its two measured shapes (round
-    * 18, VERDICT item 5). `twoLevel = false` is the one-level conditional
-    * aggregate: its exchange carries only per-partition partials
-    * (≤ partitions × |entities| rows — dimension-bounded, the 100 TB
-    * shape), but the string exemplar buffers (`max(when(P, headline))`,
-    * `max(entity_sector)`) demote it to Sort+SortAggregate — a local
-    * per-partition sort of the whole P∪N slice. `twoLevel = true` first
-    * hash-aggregates at (entity, sector, exemplar-headline) grain —
-    * strings as GROUP KEYS (allowed in a HashAggregate) rather than
-    * buffers — then finishes with a SortAggregate over the reduced grain.
-    * MEASURED AND REJECTED (r18): a noop-sunk fragment A/B in a contended
-    * window favored the two-level 25% at sf0.1, but the registered-form
-    * interleaved count() A/B in a clean window inverted it decisively
-    * (one-level 1.12 s vs two-level 1.62 s best-of-4; the bench agreed,
-    * 1.49 → 2.11 s) — the two-level's extra near-doc-grain exchange costs
-    * more than the one-level's local sort, and at scale it shuffles
-    * corpus-proportional rows where the one-level shuffles
-    * dimension-bounded partials (×10 A/B: wash, trend inverting). The
-    * registered query is one-level everywhere; the knob stays for the
-    * A/B record. Values identical (both arms pinned row-equal in
-    * CutCrossoverSpec and against the unchanged oracle).
+    * top-10 by total.
     *
-    * The VERDICT-suggested `max_by(struct(fixed-width))` re-encoding was
-    * REFUTED mechanically: max/max_by are declarative aggregates and a
-    * struct buffer is not UnsafeRow-mutable, so the operator stays a
-    * SortAggregate; only a single fixed-width scalar buffer would
-    * hash-aggregate, and an exact scalar encoding of the headline's
-    * decimal-string lexicographic order needs an orderkey-width contract
-    * plus per-digit extraction — more contract surface than the measured
-    * delta is worth (the board r17 precedent). */
-  private[graft] def basketAggregate(s: SparkSession, d: String,
-      twoLevel: Boolean): DataFrame = {
+    * The per-entity aggregate is ONE-LEVEL: its exchange carries only
+    * per-partition partials (dimension-bounded), at the price of a local
+    * Sort+SortAggregate for the string exemplar buffers. A two-level
+    * (entity, sector, headline)-grain hash aggregate lost the clean-window
+    * A/B (1.12 s vs 1.62 s at sf0.1, BASELINE.md round 18) and was
+    * reverted in e091cfc; a `max_by(struct)` buffer cannot hash-aggregate
+    * either (a struct buffer is not UnsafeRow-mutable). */
+  private val qBasket = Q(
+    "q_basket",
+    (s, d) => {
       // r17: ONE corpus pass instead of three (pos / neg / sectorInfo each
       // re-scanned the star join; no exchange reuse — the pre-aggregation
       // filters differ). All three sides are per-entity aggregates over the
@@ -70,31 +49,14 @@ object Baskets {
       // by the same oracle.
       val lc = Labeler.withStubLabels(Tables.chunkRowsPruned(s, d,
         withOrders = true, withSupplier = true, withText = true))
-      val slice = lc.filter(col("label").isin("P", "N"))
-      val agged =
-        if (twoLevel)
-          slice
-            .groupBy(col("entity_name"), col("entity_sector"),
-              when(col("label") === "P", col("headline")).as("hp"))
-            .agg(
-              Labeler.countOf(col("label"), "P").as("p"),
-              Labeler.countOf(col("label"), "N").as("n"))
-            .groupBy(col("entity_name"))
-            .agg(
-              sum(col("p")).as("positive_exp"),
-              sum(col("n")).as("negative_exp"),
-              max(col("hp")).as("exemplar_headline"),
-              max(col("entity_sector")).as("entity_sector"))
-        else
-          slice
-            .groupBy(col("entity_name"))
-            .agg(
-              Labeler.countOf(col("label"), "P").as("positive_exp"),
-              Labeler.countOf(col("label"), "N").as("negative_exp"),
-              max(when(col("label") === "P", col("headline")))
-                .as("exemplar_headline"),
-              max(col("entity_sector")).as("entity_sector"))
-      agged
+      lc.filter(col("label").isin("P", "N"))
+        .groupBy(col("entity_name"))
+        .agg(
+          Labeler.countOf(col("label"), "P").as("positive_exp"),
+          Labeler.countOf(col("label"), "N").as("negative_exp"),
+          max(when(col("label") === "P", col("headline")))
+            .as("exemplar_headline"),
+          max(col("entity_sector")).as("entity_sector"))
         .filter(col("positive_exp") > 0)
         .withColumn("total_exposure", col("positive_exp") + col("negative_exp"))
         .withColumn("positive_pct",
@@ -108,19 +70,7 @@ object Baskets {
           col("negative_pct"), col("net_exposure"), col("exemplar_headline"))
         .orderBy(col("total_exposure").desc, col("entity_name"))
         .limit(10)
-  }
-
-  private val qBasket = Q(
-    "q_basket",
-    // one-level EVERYWHERE (r18 negative result): a noop-sunk fragment
-    // A/B in a contended window showed the two-level hash form winning
-    // 25% at sf0.1, but the REGISTERED-form interleaved count() A/B in a
-    // clean window refuted it decisively (one-level 1.12 s vs two-level
-    // 1.62 s best-of-4, matching a 1.49→2.11 bench regression) — the
-    // two-level's extra near-doc-grain exchange costs more than the
-    // one-level's local sort at every operating point measured. The
-    // knob + CutCrossoverSpec pin stay as the record.
-    (s, d) => basketAggregate(s, d, twoLevel = false),
+    },
     Some(
       s"""${Oracle.labeledCte},
          |pos AS (

@@ -46,19 +46,14 @@ import graft.model.Tables
   * hash aggregate for the edge arm (the topics explode fans out ≤ 2 per
   * row, the non-COMP topic arity; the arm reads the ORDERS-FREE sentence
   * projection [[Tables.sentenceTopicRows]], so it is map-only up to its
-  * dedup exchange — see the stage-2 note in [[pipelineFrame]]) and one
+  * dedup exchange — see the stages 1+2 note in [[pipelineFrame]]) and one
   * (entity, day) aggregate for the panel arm. Every downstream stage
   * re-reads one of those two
   * dimension-bounded frames (≤ |entities|·|topics|·|labels| and
   * ≤ |entities|·|days| rows at any corpus size), and each frame's shuffle
   * exchange is deduplicated across its readers by ReusedExchange within
   * the single action — measured at sf0.1, this beats separate
-  * per-derivation aggregates. The S8 one-scan alternative (materialize
-  * the projected kept slice once, derive both arms from it) is one flag
-  * away in [[pipelineFrame]]: it wins ~15% at sf0.1 but loses 1.5× at
-  * the ×50 blowup — a measured crossover, documented there; two-pass is
-  * the shape that holds at 100 TB (no corpus-sized materialization).
-  * The summary merge and the degree
+  * per-derivation aggregates. The summary merge and the degree
   * semi-join broadcast explicitly — the fact table never shuffles past
   * the two groupBys.
   */
@@ -73,67 +68,30 @@ object ElectionPipeline {
     * blacklist stage provably drops rows AND exercises literal escaping. */
   private[graft] val TopicBlacklist = Seq("NATION_3", "MIDDLE EAST")
 
-  /** The gated pipeline frame. `oneScan = true` selects the S8 shape the
-    * scale notes document: checkpoint the shared kept slice PROJECTED to
-    * the six columns both arms read and derive BOTH the topics-explode
-    * arm and the daily-volume arm from the materialized cut — the corpus
-    * is scanned once instead of twice, at the price of materializing the
-    * projected kept slice (a label-filtered fraction of the corpus, NOT
-    * dimension-bounded — but narrow: no text, no span arrays). Values are
-    * identical either way (the daily arm's columns are the same
-    * projections in both relations; ElectionCutProbe pins row equality).
-    * The shape is a measured CROSSOVER: r15 measured a FULL-WIDTH cut at
-    * 10 s vs 4.9 s two-pass and rejected it; r16's projected cut wins at
-    * sf0.1 (ElectionCutProbe interleaved: 8.5-10.5 s vs 10.0-11.3 s), is
-    * noise-dominated at ×10/×25, and loses 1.5× at the ×50 blowup
-    * (PipelineScaleStress A/B: 58.7 s vs 39.2 s — the cut materializes a
-    * constant fraction of the corpus, which overtakes the saved pruned
-    * re-scan). The registered gate keeps the two-pass shape (the winner
-    * at 100 TB); this knob plus the probe keep the A/B re-runnable at
-    * any operating point. */
-  private[graft] def pipelineFrame(s: SparkSession, d: String,
-      oneScan: Boolean): DataFrame = {
-      // stage 1 (one-scan shape only): labeled full-relation scan,
-      // monitored labels only, cut to the projected kept slice. The
-      // two-pass shape never touches this frame — its topics arm builds
-      // from the orders-free projection below, and its daily arm reads the
-      // plain chunk relation.
-      lazy val kept = graft.PlanProbe.cut(
-        Labeler.withStubLabels(Tables.chunkRowsFull(s, d))
-          .filter(col("label").isin(MonitoredLabels: _*))
-          .select(col("entity_name"), col("sentence_id"), col("label"),
-            col("timestamp_utc"), col("topics"), col("topics_type")))
-      // stage 2: COMP-filtered, blacklist-filtered topics explode. The
-      // two-pass arm derives it from [[Tables.sentenceTopicRows]] — the
+  /** The gated pipeline frame: two corpus passes, no cut. A one-scan
+    * shape (cut the projected kept slice, derive both arms from it) won
+    * ~15% at sf0.1 but lost 1.5× at the ×50 blowup (58.7 s vs 39.2 s) and
+    * ran out of memory at ×100: its cut grows with the corpus (BASELINE.md
+    * round 16). */
+  private def pipelineFrame(s: SparkSession, d: String): DataFrame = {
+      // stages 1+2: monitored labels, COMP-filtered, blacklist-filtered
+      // topics explode, derived from [[Tables.sentenceTopicRows]] — the
       // orders join is ELIMINATED (its scaladoc: every column this arm
       // reads is header-free; COMP, the one orders-derived topic, is
-      // exactly what this stage filters OUT in both shapes, and SECT/REGI
-      // are broadcast-dim columns). That makes the arm MAP-ONLY up to the
+      // exactly what this stage filters OUT, and SECT/REGI are
+      // broadcast-dim columns). That makes the arm MAP-ONLY up to the
       // dedup exchange, so a hot document's rows spread across scan splits
       // instead of serializing in one hash(orderkey) join partition — the
       // ×25 hot-key probe measured the joined shape at a 14.8 s single
       // task (29% of wall, 4.6× the uniform control) that AQE cannot
-      // split (multi-consumer reused fact exchange). Values are identical
-      // either way: the one-scan row-equality pin (spec + probe + stress)
-      // and the unchanged DuckDB oracle both gate it.
-      val exploded =
-        if (oneScan)
-          kept
-            .select(col("entity_name"), col("sentence_id"), col("label"),
-              explode(filter(
-                zip_with(col("topics_type"), col("topics"),
-                  (tt, t) => struct(tt.as("tt"), t.as("topic"))),
-                x => x.getField("tt") =!= "COMP")).as("t"))
-            .select(col("entity_name"), col("sentence_id"), col("label"),
-              col("t.topic").as("topic"))
-            .filter(!col("topic").isin(TopicBlacklist: _*))
-        else
-          Labeler.withStubLabels(Tables.sentenceTopicRows(s, d))
-            .filter(col("label").isin(MonitoredLabels: _*))
-            .select(col("entity_name"), col("sentence_id"), col("label"),
-              explode(array(col("entity_sector"), col("entity_industry")))
-                .as("topic"))
-            .filter(!col("topic").isin(TopicBlacklist: _*))
+      // split (multi-consumer reused fact exchange). The unchanged DuckDB
+      // oracle gates the values.
+      val exploded = Labeler.withStubLabels(Tables.sentenceTopicRows(s, d))
+        .filter(col("label").isin(MonitoredLabels: _*))
+        .select(col("entity_name"), col("sentence_id"), col("label"),
+          explode(array(col("entity_sector"), col("entity_industry")))
+            .as("topic"))
+        .filter(!col("topic").isin(TopicBlacklist: _*))
       // stage 4: ONE corpus pass at (entity, topic, label) grain — weight
       // and majority label both derive from it, and the shared aggregate's
       // shuffle exchange is deduplicated across the two derivations (and
@@ -188,17 +146,12 @@ object ElectionPipeline {
       // merge sides (post-aggregation sizes are opaque to the planner).
       // the bounds, the entity set, and the panel join all re-read this
       // aggregate (≤ |entities|·|days| rows) — ReusedExchange shares its
-      // shuffle, same argument as etl. In the two-pass shape the daily arm
-      // needs no topic arrays, so it reads the plain chunk relation rather
-      // than relying on the optimizer to prune the span/topic projections;
-      // in the one-scan shape it reads the SAME materialized kept slice
-      // (identical projections, so identical values).
-      val dailyBase =
-        if (oneScan) kept
-        else Labeler.withStubLabels(Tables.chunkRowsPruned(s, d,
+      // shuffle, same argument as etl. The daily arm needs no topic
+      // arrays, so it reads the plain chunk relation rather than relying
+      // on the optimizer to prune the span/topic projections.
+      val daily = Labeler.withStubLabels(Tables.chunkRowsPruned(s, d,
           withOrders = true, withSupplier = true, withText = true))
-          .filter(col("label").isin(MonitoredLabels: _*))
-      val daily = dailyBase
+        .filter(col("label").isin(MonitoredLabels: _*))
         .groupBy(col("entity_name"),
           date_trunc("day", col("timestamp_utc")).cast("date").as("day"))
         .agg(countDistinct(col("sentence_id")).as("vol"))
@@ -231,19 +184,7 @@ object ElectionPipeline {
 
   private val qElectionPipeline = Q(
     "q_election_pipeline",
-    // two-pass shape: the winning side of a MEASURED CROSSOVER (round 16,
-    // BASELINE.md). The projected one-scan cut wins consistently at sf0.1
-    // (ElectionCutProbe interleaved: 8.5-10.5 s vs 10.0-11.3 s), is
-    // noise-dominated at the ×10/×25 blowups, and LOSES decisively at
-    // ×50 (PipelineScaleStress: 58.7 s vs 39.2 s) — the cut's
-    // corpus-fraction materialization overtakes the saved column-pruned
-    // re-scan as the corpus grows. Two-pass is the default: no
-    // corpus-sized materialization (block-store footprint; an
-    // executor-loss liability under the local cut policy) for a ~1 s
-    // gate-scale win that inverts at scale. pipelineFrame(oneScan =
-    // true) keeps the A/B one flag away; values identical (spec + probe +
-    // stress pin row equality).
-    (s, d) => pipelineFrame(s, d, oneScan = false),
+    pipelineFrame,
     Some {
       val labelsIn = MonitoredLabels.map(Oracle.sqlLit).mkString(", ")
       val blacklistIn = TopicBlacklist.map(Oracle.sqlLit).mkString(", ")

@@ -391,16 +391,18 @@ object Tables {
   private val DefaultCutCrossoverBytes = 64L * 1024 * 1024
 
   /** On-disk bytes of the fact table (`lineitem.parquet`, file or
-    * directory), memoized per sfDir — one filesystem stat per corpus, not
-    * per query construction. */
+    * directory), memoized per (path, modification time): one stat per
+    * query construction instead of a recursive size walk, and a table
+    * rewritten in place (a new file or directory) is sized again. */
   private val factBytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private[graft] def factBytes(s: SparkSession, d: String): Long =
-    factBytesCache.computeIfAbsent(d, dir => {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      java.lang.Long.valueOf(fs.getContentSummary(p).getLength)
-    })
+    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
+  private[graft] def factBytes(s: SparkSession, d: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(s"$d/lineitem.parquet")
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val mtime = fs.getFileStatus(p).getModificationTime
+    factBytesCache.computeIfAbsent((d, mtime),
+      _ => java.lang.Long.valueOf(fs.getContentSummary(p).getLength))
+  }
 
   /** The measured lineage-cut crossover policy (round 18,
     * CutCrossoverProbe + BASELINE.md): cutting a shared DIMENSION-BOUNDED

@@ -41,6 +41,8 @@ object CorpusOps {
     * @param symEdges symmetric edge list `(src, dst)` — both directions
     *                 present for every undirected edge
     * @return `(doc_id, label)` where label = min vertex id of the component
+    * @throws IllegalStateException when the labels have not converged
+    *         after `maxRounds` rounds
     */
   def connectedComponents(vertices: DataFrame, symEdges: DataFrame,
       maxRounds: Int = 20): DataFrame =
@@ -203,14 +205,16 @@ object CorpusOps {
         f"[cc] round $rounds: changed=$nChanged%d " +
           f"${(System.nanoTime() - tRound) / 1e9}%.2f s")
     }
-    if (!converged)
-      // loud, not silent: unconverged labels are WRONG cluster ids
-      System.err.println(s"[graft] WARNING: connectedComponents hit the " +
-        s"$maxRounds-round cap without converging; labels may be incomplete")
     // the final round's checkpoint is what the returned frame reads; only
     // the edge list is dead now — the final cut is registered for the NEXT
     // invocation (or releaseCcState) to retire
     free(edges)
+    if (!converged) {
+      // unconverged labels are WRONG cluster ids: fail, never return them
+      free(current)
+      throw new IllegalStateException(s"connectedComponents hit the " +
+        s"$maxRounds-round cap without converging")
+    }
     retireLastCut(Some(current))
     (withSingletons(labels), rounds)
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Interleaved A/B of the five lineage-cut knobs round 17 REVERTED at gate
   * scale (board counts, month×entity scaffold, exposure panel, semi/anti
@@ -12,11 +12,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * these five: at what corpus size does one checkpoint become cheaper than
   * 1-2 extra pruned passes?
   *
-  * Protocol (same as [[NarrativeCutProbe]]): interleave the two shapes
-  * (A B A B …) so contention drift hits both arms equally, pin their row
-  * equality, report best-of. With `factor > 1` the probe manufactures a
-  * [[PipelineScaleStress.blowUpFacts]] uniform blowup (facts ×factor, dims
-  * verbatim — the 100 TB shape) in a temp dir and measures there.
+  * Protocol: interleave the two shapes (A B A B …) so contention drift
+  * hits both arms equally, pin their row equality on every round (any
+  * mismatch exits 1), report best-of. With `factor > 1` the probe
+  * manufactures a [[PipelineScaleStress.blowUpFacts]] uniform blowup
+  * (facts ×factor, dims verbatim — the 100 TB shape) in a temp dir and
+  * measures there.
   *
   * {{{
   * spark-submit --master 'local[32]' --driver-memory 16g \
@@ -66,14 +67,14 @@ object CutCrossoverProbe {
           graft.PlanProbe.releaseCuts()
           ((System.nanoTime() - t0) / 1e9, rows)
         }
-        run(cut = false) // warm-up, discarded
+        def sorted(rows: Array[Row]) = rows.map(_.toString).sorted
+        val reference = sorted(run(cut = false)._2) // warm-up, not timed
         val (uncut, cut) = (1 to rounds).map { _ =>
           (run(cut = false), run(cut = true))
         }.unzip
-        val eq = uncut.head._2.map(_.toString).sorted
-          .sameElements(cut.head._2.map(_.toString).sorted)
+        val eq = (uncut ++ cut).forall(r => sorted(r._2).sameElements(reference))
         if (!eq) anyMismatch = true
-        def fmt(ts: Seq[(Double, Array[org.apache.spark.sql.Row])]) =
+        def fmt(ts: Seq[(Double, Array[Row])]) =
           ts.map(t => f"${t._1}%.3f").mkString(",")
         println(f"[cutprobe] $name%-26s ×$factor%-3d values_equal=$eq " +
           f"uncut=[${fmt(uncut)}] best=${uncut.map(_._1).min}%.3f " +

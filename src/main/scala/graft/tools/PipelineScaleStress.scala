@@ -81,12 +81,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   *  - wall time within [[SkewWallFactor]]× of the UNIFORM blowup at the
   *    same n, timed in the same session.
   *
-  * Also measured (recorded, not gated): the ElectionPipeline S8 one-scan
-  * knob ([[graft.analytics.ElectionPipeline.pipelineFrame]] `oneScan`) at
-  * both operating points, with a driver-side row-equality pin against the
-  * two-pass shape — the documented 100 TB trade (checkpoint the kept
-  * slice vs scan twice) becomes a measurement instead of a note.
-  *
   * {{{
   * spark-submit --master 'local[32]' --driver-memory 16g \
   *   --class graft.tools.PipelineScaleStress <jar> \
@@ -427,48 +421,7 @@ object PipelineScaleStress {
 
     val armFailures = auditSearchArms(spark, outDir, s"×$factor")
 
-    // S8 shape A/B (recorded, not gated on time — ElectionCutProbe owns
-    // the interleaved decision measurement): time BOTH pipelineFrame
-    // shapes explicitly, whatever the registered default is, and PIN their
-    // row equality at the blowup — the knob must never change values
-    val electionKnobFailures: Seq[String] =
-      if (!pipelines.contains("q_election_pipeline")) Nil
-      else try {
-        def sortKey(r: Row) = r.toSeq.map(String.valueOf).mkString("|")
-        val E = graft.analytics.ElectionPipeline
-        val (t2Base, _, _, _) =
-          timed(E.pipelineFrame(spark, srcDir, oneScan = false))
-        val (t2Big, twoRows, _, _) =
-          timed(E.pipelineFrame(spark, outDir, oneScan = false))
-        val (t1Base, _, _, _) =
-          timed(E.pipelineFrame(spark, srcDir, oneScan = true))
-        val (t1Big, oneRows, _, _) =
-          timed(E.pipelineFrame(spark, outDir, oneScan = true))
-        println(f"[pipestress] election S8 A/B: two-pass base=$t2Base%.2fs " +
-          f"×$factor=$t2Big%.2fs; one-scan base=$t1Base%.2fs " +
-          f"×$factor=$t1Big%.2fs")
-        if (oneRows.map(sortKey).sorted.sameElements(
-            twoRows.map(sortKey).sorted)) Nil
-        else Seq(s"election one-scan knob changed VALUES at ×$factor " +
-          s"(${oneRows.length} vs ${twoRows.length} rows)")
-      } catch {
-        // The A/B is a RECORDED probe of the rejected-vs-registered shapes,
-        // not a gate: the registered two-pass shape already ran (and was
-        // gated) in the main sweep above. An arm exceeding the session's
-        // memory envelope at an extreme factor is itself a measurement —
-        // the first observed instance was the one-scan arm's corpus-
-        // fraction checkpoint OOMing at ×100 under a 24g heap while
-        // two-pass completed — so it is reported loudly but does not fail
-        // a sweep whose own pins all held.
-        case e: Throwable =>
-          graft.PlanProbe.releaseCuts()
-          println(s"[pipestress] election S8 A/B DID NOT COMPLETE at " +
-            s"×$factor — recorded as an operating-envelope result, not a " +
-            s"sweep failure: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          Nil
-      }
-
-    val out = failures ++ armFailures ++ electionKnobFailures
+    val out = failures ++ armFailures
     if (out.isEmpty)
       println(s"[pipestress] all ${pipelines.size} composed-lifecycle " +
         s"scale pins hold at ×$factor (n=$n chunks)")

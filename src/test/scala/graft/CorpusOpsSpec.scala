@@ -108,13 +108,14 @@ class CorpusOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         "intermediate checkpoints are not being freed")
   }
 
-  test("round cap exhaustion still returns one row per vertex") {
-    // maxRounds=1 cannot finish a diameter-15 path: the loop must exit at
-    // the cap (warning on stderr) and hand back a complete, if unconverged,
-    // labeling — never lose or duplicate vertices
+  test("round cap exhaustion fails instead of returning unconverged labels") {
+    // maxRounds=1 cannot finish a diameter-15 path: the labels at the cap
+    // are wrong cluster ids, so the loop must throw rather than return them
     val ids = (0L to 15L)
-    val out = CorpusOps.connectedComponents(
-      vertices(ids), pathEdges(ids), maxRounds = 1)
-    assert(out.select(col("doc_id")).distinct().count() == 16)
+    val e = intercept[IllegalStateException] {
+      CorpusOps.connectedComponentsWithRounds(
+        vertices(ids), pathEdges(ids), maxRounds = 1)
+    }
+    assert(e.getMessage.contains("1-round cap"))
   }
 }

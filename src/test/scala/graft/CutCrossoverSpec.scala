@@ -16,7 +16,8 @@ import graft.model.Tables
   *  - policy: the threshold reads the fact table's on-disk size and the
   *    session conf, so the small test SFs stay below it (the registered
   *    queries keep their r17 uncut gate-scale shapes — bench
-  *    comparability) and a lowered conf flips it on;
+  *    comparability), a lowered conf flips it on, and a fact table
+  *    rewritten at the same path is sized again;
   *  - value-neutrality: cut and uncut arms are row-identical on real
   *    testdata — the cut is a materialization boundary, not a semantic
   *    change, which is what licenses gating it on something as
@@ -50,11 +51,40 @@ class CutCrossoverSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally spark.conf.unset(Tables.CutCrossoverBytesKey)
   }
 
+  test("a fact table rewritten in place re-reads its size") {
+    // the size memo must not serve the first write's size after the
+    // corpus at the same path is replaced by a larger one
+    val dir = java.nio.file.Files.createTempDirectory("graft_fact_bytes")
+    val d = dir.toString
+    def writeFacts(rows: Long): Unit =
+      spark.range(rows).selectExpr("id AS l_orderkey", "hash(id) AS h")
+        .coalesce(1).write.mode("overwrite").parquet(s"$d/lineitem.parquet")
+    try {
+      writeFacts(10)
+      val small = Tables.factBytes(spark, d)
+      spark.conf.set(Tables.CutCrossoverBytesKey, (small + 1).toString)
+      assert(!Tables.beyondCutCrossover(spark, d))
+      // some filesystems keep modification times at one-second grain
+      Thread.sleep(1100)
+      writeFacts(100000)
+      assert(Tables.factBytes(spark, d) > small)
+      assert(Tables.beyondCutCrossover(spark, d),
+        "beyondCutCrossover kept the pre-rewrite size of lineitem.parquet")
+    } finally {
+      spark.conf.unset(Tables.CutCrossoverBytesKey)
+      org.apache.hadoop.fs.FileUtil.fullyDelete(dir.toFile)
+    }
+  }
+
   private def assertCutNeutral(name: String,
       mk: (SparkSession, String, Boolean) => org.apache.spark.sql.DataFrame)
       : Unit = test(s"$name: cut and uncut arms are row-identical") {
     val uncut = mk(spark, sf, false).collect().map(_.toString).sorted
-    val cut = mk(spark, sf, true).collect().map(_.toString).sorted
+    // release the cut arm's checkpoint even on failure, or its blocks leak
+    // into the suite's shared session
+    val cut =
+      try mk(spark, sf, true).collect().map(_.toString).sorted
+      finally PlanProbe.releaseCuts()
     assert(uncut.sameElements(cut), s"$name cut arm diverged from uncut")
   }
 
@@ -68,9 +98,4 @@ class CutCrossoverSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.analytics.Baskets.antiMembershipFrame)
   assertCutNeutral("q_board_pipeline",
     graft.analytics.BoardPipeline.pipelineFrame)
-
-  // The basket's size-gated aggregate shape (VERDICT item 5) rides the
-  // same crossover policy: pin the two arms row-identical the same way.
-  assertCutNeutral("q_basket (one- vs two-level aggregate)",
-    graft.analytics.Baskets.basketAggregate)
 }
